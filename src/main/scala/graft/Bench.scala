@@ -239,8 +239,8 @@ object Bench {
     val queryParams = BqfParams(qBits = 16, countBits = 8, hashBits = 48, kTokens = 8, zTokens = 2)
     lazy val queryDf = TokensTable.dataframe(spark, 20000, partitions = cpus)
     lazy val qfps = sgram_fingerprints(col("tokens"), queryParams.sTokens, queryParams.hashBits, queryParams.seed)
-    // sorted-index + tree merge: same blob as buildGlobal (canonical
-    // layout), ~2x faster cold — this build is untimed but real wall time
+    // sorted-index + tree merge: disjoint shards, so the same blob as
+    // BqfPipeline.buildSharded — this build is untimed but real wall time
     def buildBlob(df: org.apache.spark.sql.DataFrame,
                   fps: org.apache.spark.sql.Column,
                   p: BqfParams): Array[Byte] =

@@ -76,12 +76,12 @@ object Cli {
       case "build" =>
         val df = spark.read.parquet(opts("-i"))
         val t0 = System.nanoTime()
-        val bytes = BqfPipeline.buildSharded(df,
+        val sketch = BackpackFilter.deserialize(BqfPipeline.buildSharded(df,
           sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed),
-          col("doc_id"), params, nBuckets = 64)
-        BackpackFilter.saveToFile(BackpackFilter.deserialize(bytes), opts("-o"))
+          col("doc_id"), params, nBuckets = 64))
+        BackpackFilter.saveToFile(sketch, opts("-o"))
         println(s"Construction time = ${(System.nanoTime() - t0) / 1000000}ms " +
-          s"(${BackpackFilter.deserialize(bytes).distinctCount} distinct s-grams)")
+          s"(${sketch.distinctCount} distinct s-grams)")
 
       case "query" =>
         val t0 = System.nanoTime()

@@ -66,11 +66,10 @@ object Queries {
   private val sketchCache = new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
 
   /** Build the text-shingle BQF for a scale dir and return a query handle.
-    * Uses the sorted-index scale path + tree merge rather than the direct
-    * UDAF aggregation: measured 2.4 vs 4.2 s cold at sf0.1 (the radix bulk
-    * build beats per-insert aggregation), and the canonical layout makes
-    * the two builds BIT-IDENTICAL (verified byte-for-byte), so nothing
-    * downstream can tell the difference.
+    * Tree-merges the cached sorted-index shards rather than aggregating
+    * with the per-insert UDAF: measured 2.4 vs 4.2 s cold at sf0.1. The
+    * shards cover disjoint fingerprint ranges, so the merge lands on the
+    * tight canonical q and writes the same bytes as `BqfPipeline.buildSharded`.
     */
   def buildTextSketch(spark: SparkSession, dir: String): BqfQuery = {
     val bytes = sketchCache.computeIfAbsent(s"text|$dir|$TextParams|$ShingleN", _ =>
@@ -654,8 +653,8 @@ object Queries {
     val df = TokensTable.dataframe(spark, nRows)
     val fps = sgram_fingerprints(col("tokens"), TokParams.sTokens, TokParams.hashBits, TokParams.seed)
     val bytes = sketchCache.computeIfAbsent(s"tok|$nRows|$TokParams", _ => {
-      // sorted-index path + tree merge, same switch as buildTextSketch:
-      // radix bulk build beats per-insert aggregation, output bit-identical
+      // sorted-index path + tree merge, as in buildTextSketch: disjoint
+      // shards, so the blob equals BqfPipeline.buildSharded's
       val shards = BqfPipeline.buildIndexSorted(df, fps, TokParams, nBuckets = 32)
       BqfPipeline.treeMerge(shards, 32, fanout = 32)
     })

@@ -1,9 +1,7 @@
 package graft.operators
 
-import graft.core.{BackpackFilter, SequenceStats}
+import graft.core.BackpackFilter
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.udf
 
 /** Executor-side lazily-deserialized view of a serialized sketch: the bytes
   * broadcast once per job; each executor JVM materializes the filter on
@@ -15,10 +13,9 @@ final class SketchRef(val bytes: Array[Byte]) extends Serializable {
 }
 
 /** Broadcast-sketch query surface: membership, abundance and Fimpera
-  * sequence statistics against a completed build. The Column forms
-  * ([[abundanceOf]]/[[containsOf]]/[[sequenceStatsOf]]) are native Catalyst
-  * expressions — abundance/membership stay inside whole-stage codegen; the
-  * UDF forms remain for users composing with udf-style APIs.
+  * sequence statistics against a completed build, as native Catalyst
+  * expressions ([[abundanceOf]]/[[containsOf]]/[[sequenceStatsOf]]) —
+  * abundance/membership stay inside whole-stage codegen.
   */
 final class BqfQuery(spark: SparkSession, sketchBytes: Array[Byte]) extends Serializable {
   private val bc = spark.sparkContext.broadcast(new SketchRef(sketchBytes))
@@ -37,32 +34,6 @@ final class BqfQuery(spark: SparkSession, sketchBytes: Array[Byte]) extends Seri
   /** Fimpera sequence stats of a tokens array column (struct-typed). */
   def sequenceStatsOf(tokens: Column): Column =
     ColumnBridge.column(BqfSequenceStatsExpr(ColumnBridge.expression(tokens), bc))
-
-  /** Abundance of a single fingerprint (LongType -> LongType). */
-  def abundanceUdf: UserDefinedFunction = {
-    val b = bc
-    udf((fp: Long) => b.value.filter.abundance(fp))
-  }
-
-  /** Membership of a single fingerprint. */
-  def containsUdf: UserDefinedFunction = {
-    val b = bc
-    udf((fp: Long) => b.value.filter.contains(fp))
-  }
-
-  /** Max abundance over an array of fingerprints (0 when empty). */
-  def maxAbundanceUdf: UserDefinedFunction = {
-    val b = bc
-    udf((fps: Seq[Long]) => if (fps.isEmpty) 0L else fps.map(b.value.filter.abundance).max)
-  }
-
-  /** Fimpera per-sequence stats over a tokens array; returns a struct
-    * (minimum, maximum, average, presenceRatio) mirroring `result_query`.
-    */
-  def sequenceStatsUdf: UserDefinedFunction = {
-    val b = bc
-    udf((tokens: Seq[Int]) => b.value.filter.sequenceStats(tokens.toArray))
-  }
 
   def filter: BackpackFilter = bc.value.filter
 

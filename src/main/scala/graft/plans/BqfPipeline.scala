@@ -1,45 +1,37 @@
 package graft.plans
 
 import graft.operators.{BqfParams, SketchAggregators}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed build plans for BQF sketches.
   *
-  * Scale design (100 TB / 1000 executors): per-partition partial sketches are
-  * produced by Catalyst's partial aggregation (ObjectHashAggregate keeps the
-  * filter as a JVM object per group); only serialized sketch blobs cross
-  * shuffle boundaries. The sharded path buckets rows by a deterministic
-  * xxhash64 of the row id, so shard membership is independent of Spark's
-  * physical partitioning — the property that makes checkpoints resumable and
-  * replays idempotent. Hot `source` values are handled by salt fan-out
-  * before the per-source merge (two-level aggregation), and wide merges fold
-  * through a bounded-fanout tree so no single reducer receives all blobs.
+  * Scale design (100 TB / 1000 executors): every single-sketch build goes
+  * through one sorted shard core. Map tasks group fingerprints into
+  * array chunks by fingerprint-range bucket (high bits), the exchange moves
+  * those 8-byte fingerprints, and each reduce task builds its shard in one
+  * radix-sorted `fromEntries` pass. Shards cover disjoint fingerprint
+  * ranges, so merging or re-sharding them ([[reshardMerge]]) is another
+  * sorted build with the tight canonical q, whatever the bucket count.
+  * The per-insert UDAF remains for the builds that group rows by a key
+  * other than the fingerprint: the salted per-source build, and the
+  * checkpointed build, whose deterministic row-id buckets make checkpoints
+  * resumable and replays idempotent.
   */
 object BqfPipeline {
 
-  /** One-shot global build: fingerprint arrays -> single serialized sketch.
-    * Plan: partial ObjectHashAggregate per partition -> single-row final
-    * merge (fine up to a few thousand partitions; beyond that use
-    * [[buildSharded]]).
-    */
-  def buildGlobal(df: DataFrame, fpCol: Column, params: BqfParams): Array[Byte] = {
-    val bqf = SketchAggregators.bqfOverFingerprintArrays(params)
-    df.agg(bqf(fpCol).as("sketch")).head().getAs[Array[Byte]](0)
-  }
-
-  /** Deterministic-bucket sharded build with bounded-fanout tree merge.
-    * `idCol` must be a stable row identifier (e.g. doc_id).
+  /** Single-sketch build: the sorted shard build over `nBuckets` fingerprint
+    * ranges, resharded to one blob. The result is the canonical table at
+    * q = `BackpackFilter.tightQBits(distinctCount)`, byte-identical for any
+    * `nBuckets` and any input partitioning. An input with no fingerprints
+    * gives a valid empty sketch. `idCol` is unused: shards are fingerprint
+    * ranges, not row-id buckets; the parameter keeps the signature.
     */
   def buildSharded(df: DataFrame, fpCol: Column, idCol: Column, params: BqfParams,
-                   nBuckets: Int, fanout: Int = 16): Array[Byte] = {
-    val bqf = SketchAggregators.bqfOverFingerprintArrays(params)
-    val shards = df
-      .withColumn("bucket", pmod(xxhash64(idCol), lit(nBuckets)))
-      .groupBy(col("bucket"))
-      .agg(bqf(fpCol).as("sketch"))
-    treeMerge(shards, nBuckets, fanout)
-  }
+                   nBuckets: Int): Array[Byte] =
+    reshardMerge(buildIndexSorted(df, fpCol, params, nBuckets), params, 1)
+      .collect().headOption.map(_.getAs[Array[Byte]]("sketch"))
+      .getOrElse(buildShard(Array.emptyLongArray, null, params))
 
   /** Scale-path index build: explode fingerprints, shuffle them to
     * fingerprint-range buckets (high bits, so quotients inside each shard
@@ -55,11 +47,34 @@ object BqfPipeline {
     */
   def buildIndexSorted(df: DataFrame, fpCol: Column, params: graft.operators.BqfParams,
                        nBuckets: Int): DataFrame = {
-    require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
     val spark = df.sparkSession
     import spark.implicits._
-    val bucketBits = java.lang.Integer.numberOfTrailingZeros(nBuckets)
-    val shift = params.hashBits - bucketBits
+    sortedShards(df.select(fpCol.as("fps")).as[Array[Long]], params, nBuckets)
+  }
+
+  /** [[buildIndexSorted]] over an ALREADY-EXPLODED fingerprint column (one
+    * Long row per k-gram) — the input shape a streaming ingest batch or a
+    * cached/filtered fingerprint table hands you. The singles are re-batched
+    * into arrays, so the plan is the same from the chunking map stage on and
+    * bulk-vs-incremental comparisons charged from the same cached input are
+    * symmetric.
+    */
+  def buildIndexSortedFromFps(fps: DataFrame, params: BqfParams, nBuckets: Int): DataFrame = {
+    val spark = fps.sparkSession
+    import spark.implicits._
+    sortedShards(fps.select(col("fp")).as[Long].mapPartitions(_.grouped(8192).map(_.toArray)),
+      params, nBuckets)
+  }
+
+  /** The sorted shard core: chunk by bucket map-side, exchange the chunks,
+    * gather each bucket's chunks and build its shard with `fromEntries`.
+    */
+  private def sortedShards(fpArrays: Dataset[Array[Long]], params: BqfParams,
+                           nBuckets: Int): DataFrame = {
+    require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
+    val spark = fpArrays.sparkSession
+    import spark.implicits._
+    val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
     // Map-side bucketing into ARRAY CHUNKS: a profile of this job at 155M
     // k-grams showed fingerprint extraction itself costs ~2 s at 8 cores
     // while shuffling the fingerprints as individual rows cost ~21 s and
@@ -69,34 +84,8 @@ object BqfPipeline {
     // array row per bucket (~tasks x buckets rows total instead of one row
     // per k-gram); array encode/decode is a memcpy. Same shuffle BYTES,
     // ~10^4x fewer shuffle ROWS.
-    df.select(fpCol.as("fps")).as[Array[Long]]
+    fpArrays
       .mapPartitions(docs => chunkByBucket(docs, nBuckets, shift))
-      .toDF("bucket", "chunk")
-      .repartition(nBuckets, col("bucket"))
-      .as[(Long, Array[Long])]
-      .mapPartitions { it =>
-        gatherChunks(it.map { case (b, c) => (b, c, null) }).map { case (bucket, fps, _) =>
-          (bucket, buildShard(fps, null, params))
-        }
-      }
-      .toDF("bucket", "sketch")
-  }
-
-  /** [[buildIndexSorted]] over an ALREADY-EXPLODED fingerprint column (one
-    * Long row per k-gram) — the input shape a streaming ingest batch or a
-    * cached/filtered fingerprint table hands you. Identical plan from the
-    * chunking map stage on, so bulk-vs-incremental comparisons charged from
-    * the same cached input are symmetric.
-    */
-  def buildIndexSortedFromFps(fps: DataFrame, params: BqfParams, nBuckets: Int): DataFrame = {
-    require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
-    val spark = fps.sparkSession
-    import spark.implicits._
-    val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
-    fps.select(col("fp")).as[Long]
-      // re-batch singles into arrays so the shared chunker's inner loop (and
-      // its bounded-flush accounting) is identical to the per-doc path
-      .mapPartitions(it => chunkByBucket(it.grouped(8192).map(_.toArray), nBuckets, shift))
       .toDF("bucket", "chunk")
       .repartition(nBuckets, col("bucket"))
       .as[(Long, Array[Long])]

@@ -38,6 +38,25 @@ class CliSpec extends AnyFunSuite {
     assert(res.filter(col("presence_ratio") < 1.0).count() == 0)
   }
 
+  test("build over an input with no s-grams writes an empty sketch that query loads") {
+    // s = k - z = 6: five-token docs have no s-gram at all; a table with no
+    // rows has none either (and no row-id bucket to build a partial for)
+    val short = TokensTable.dataframe(spark, 20, partitions = 2)
+      .withColumn("tokens", slice(col("tokens"), 1, 5)).withColumn("n_tok", lit(5))
+    for ((name, table, nRows) <- Seq(("short", short, 20L), ("no_rows", short.limit(0), 0L))) {
+      val d = s"$dir/empty_$name"
+      table.write.parquet(s"$d/tokens.parquet")
+      Cli.main(Array("build", "-i", s"$d/tokens.parquet", "-o", s"$d/sketch.bqf",
+        "-q", "14", "-c", "8", "-k", "8", "-z", "2"))
+      assert(graft.core.BackpackFilter.loadFromFile(s"$d/sketch.bqf").distinctCount == 0, name)
+      Cli.main(Array("query", "-b", s"$d/sketch.bqf", "-i", s"$d/tokens.parquet",
+        "-o", s"$d/results.parquet", "-k", "8", "-z", "2"))
+      val res = spark.read.parquet(s"$d/results.parquet")
+      assert(res.count() == nRows, name)
+      assert(res.filter(col("presence_ratio") =!= 0.0 || col("maximum") =!= 0L).count() == 0, name)
+    }
+  }
+
   test("query text surface: plain + FASTA inputs emit reference-format stat lines") {
     // the reference's query verb is text-in/text-out: SequenceN lines with
     // (min, max, average, presence ratio) per input sequence

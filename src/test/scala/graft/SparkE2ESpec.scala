@@ -25,8 +25,9 @@ class SparkE2ESpec extends AnyFunSuite {
 
   test("distributed build matches exact groupBy-count oracle") {
     val df = TokensTable.dataframe(spark, 500, partitions = 4)
-    val bytes = BqfPipeline.buildGlobal(
-      df, sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed), params)
+    val bytes = BqfPipeline.buildSharded(
+      df, sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed),
+      col("doc_id"), params, nBuckets = 16)
     val sketch = BackpackFilter.deserialize(bytes)
     val oracle = exactCounts(500)
     assert(sketch.distinctCount == oracle.size)
@@ -36,19 +37,30 @@ class SparkE2ESpec extends AnyFunSuite {
   test("build is independent of partitioning (2 vs 8 partitions)") {
     def build(parts: Int) = {
       val df = TokensTable.dataframe(spark, 400, partitions = parts)
-      BackpackFilter.deserialize(BqfPipeline.buildGlobal(
-        df, sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed), params))
+      BackpackFilter.deserialize(BqfPipeline.buildSharded(
+        df, sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed),
+        col("doc_id"), params, nBuckets = 16))
     }
     assert(build(2).enumerate() == build(8).enumerate())
   }
 
-  test("sharded tree-merge build equals global build") {
-    val df = TokensTable.dataframe(spark, 400, partitions = 4)
+  test("sharded build: same bytes at any bucket count, tight canonical q") {
+    // every doc four times under distinct doc_ids: the copies land in
+    // different row-id buckets, which is what made per-bucket partial
+    // sketches overcount distincts and grow q with the bucket count
+    val base = TokensTable.dataframe(spark, 400, partitions = 4)
+    val df = (1 to 3).foldLeft(base)((acc, i) =>
+      acc.unionByName(base.withColumn("doc_id", concat(lit(s"copy$i-"), col("doc_id")))))
     val fps = sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed)
-    val global = BackpackFilter.deserialize(BqfPipeline.buildGlobal(df, fps, params))
-    val sharded = BackpackFilter.deserialize(
-      BqfPipeline.buildSharded(df, fps, col("doc_id"), params, nBuckets = 64, fanout = 4))
-    assert(sharded.enumerate() == global.enumerate())
+    val at8 = BqfPipeline.buildSharded(df, fps, col("doc_id"), params, nBuckets = 8)
+    val at64 = BqfPipeline.buildSharded(df, fps, col("doc_id"), params, nBuckets = 64)
+    val resharded = BqfPipeline.reshardMerge(BqfPipeline.buildIndexSorted(df, fps, params, 16), params, 1)
+      .select("sketch").as[Array[Byte]].head()
+    assert(java.util.Arrays.equals(at8, at64), "buildSharded bytes depend on nBuckets")
+    assert(java.util.Arrays.equals(at8, resharded), "buildSharded bytes != reshardMerge to one shard")
+    val sketch = BackpackFilter.deserialize(at8)
+    assert(sketch.distinctCount == exactCounts(400).size)
+    assert(sketch.quotientBits == BackpackFilter.tightQBits(sketch.distinctCount))
   }
 
   test("per-source salted build: every source sketch matches its oracle") {
@@ -80,27 +92,30 @@ class SparkE2ESpec extends AnyFunSuite {
     // lineage columns present
     val shardCols = spark.read.parquet(dir).columns.toSet
     assert(CheckpointedBuild.LineageColumns.toSet.subsetOf(shardCols))
-    // final result identical to an uninterrupted global build
+    // final result identical to an uninterrupted single-sketch build
     val resumed = BackpackFilter.deserialize(CheckpointedBuild.result(spark, dir, nBuckets))
-    val direct = BackpackFilter.deserialize(BqfPipeline.buildGlobal(df, fps, params))
+    val direct = BackpackFilter.deserialize(
+      BqfPipeline.buildSharded(df, fps, col("doc_id"), params, nBuckets = 16))
     assert(resumed.enumerate() == direct.enumerate())
   }
 
-  test("broadcast query UDFs: abundance, membership, sequence stats") {
+  test("broadcast query expressions: abundance, membership, sequence stats") {
     val df = TokensTable.dataframe(spark, 200, partitions = 4)
     val fps = sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed)
-    val bytes = BqfPipeline.buildGlobal(df, fps, params)
+    val bytes = BqfPipeline.buildSharded(df, fps, col("doc_id"), params, nBuckets = 16)
     val q = new BqfQuery(spark, bytes)
     val oracle = exactCounts(200)
 
-    // abundance over every distinct fingerprint
+    // abundance and membership over every distinct fingerprint
     val got = df.select(explode(fps).as("fp")).distinct()
-      .withColumn("abund", q.abundanceUdf(col("fp")))
-      .as[(Long, Long)].collect().toMap
-    assert(got == oracle)
+      .withColumn("abund", q.abundanceOf(col("fp")))
+      .withColumn("present", q.containsOf(col("fp")))
+      .as[(Long, Long, Boolean)].collect()
+    assert(got.map(r => (r._1, r._2)).toMap == oracle)
+    assert(got.forall(_._3))
 
     // sequence stats: indexed docs have full presence
-    val stats = df.withColumn("st", q.sequenceStatsUdf(col("tokens")))
+    val stats = df.withColumn("st", q.sequenceStatsOf(col("tokens")))
       .select($"doc_id", $"st.minimum", $"st.presenceRatio")
       .as[(String, Long, Double)].collect()
     assert(stats.forall(_._3 == 1.0))
