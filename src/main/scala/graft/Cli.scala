@@ -245,7 +245,10 @@ object Cli {
         BqfPipeline.buildIndexSorted(df,
           sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed),
           params, nBuckets)
-          .write.mode("overwrite").parquet(opts("-o"))
+          // one row group per shard: parquet-mr checks the block size only
+          // after 100 records, so a task writing nBuckets/tasks shards would
+          // otherwise buffer all of them before its first flush
+          .write.mode("overwrite").option("parquet.block.row.count.limit", "1").parquet(opts("-o"))
         // sidecar records the routing params: a query-index run with a
         // mismatched -n or -q would otherwise route probes to the wrong
         // buckets and answer zeros SILENTLY

@@ -1013,9 +1013,15 @@ object BackpackFilter {
   }
 
   /** Smallest q whose 95% load cap admits `n` distinct entries. */
-  def tightQBits(n: Long): Int = {
-    var q = 7
-    while ((((1L << q) * 0.95).toLong) <= n && q < 62) q += 1
+  def tightQBits(n: Long): Int = qFor(n, 7, 62)
+
+  /** Smallest q >= from with n < 0.95 * 2^q, stopping at cap — exactly where
+    * incremental insertion's resize trigger (nDistinct + 1 >= sizeLimit)
+    * lands.
+    */
+  private def qFor(n: Long, from: Int, cap: Int): Int = {
+    var q = from
+    while ((((1L << q) * 0.95).toLong) <= n && q < cap) q += 1
     q
   }
 
@@ -1126,14 +1132,20 @@ object BackpackFilter {
     * the sort then moves keys only (half the radix memory traffic) and the
     * combine run-length-counts duplicates — results identical to passing an
     * explicit ones array.
+    *
+    * One sort per build: entries are rotated and sorted at the q that `n0`
+    * distinct entries would need (capped at `hashBits - 1`). Dedup only
+    * shrinks n, so that q is an upper bound on the final one; the keys are
+    * re-sorted only when duplicates lower it.
     */
   def fromEntries(qBits: Int, countBits: Int, hashBits: Int, mode: CountMode,
                   kTokens: Int, zTokens: Int, seed: Long,
                   fps: Array[Long], counts: Array[Long], n0: Int): BackpackFilter = {
-    // 1. sort by physical layout order
+    val sortQ = qFor(n0, qBits, hashBits - 1)
+    // 1. sort by physical layout order at sortQ
     val keys = new Array[Long](n0)
     var i = 0
-    while (i < n0) { keys(i) = rotKey(fps(i) & maskRight(hashBits), qBits, hashBits); i += 1 }
+    while (i < n0) { keys(i) = rotKey(fps(i) & maskRight(hashBits), sortQ, hashBits); i += 1 }
     val allOnes = counts == null
     val vals =
       if (allOnes) { sortKeys(keys, n0, hashBits); new Array[Long](n0) }
@@ -1158,16 +1170,14 @@ object BackpackFilter {
       i = j
     }
     val n = w
-    // smallest q >= qBits with n < 0.95 * 2^q — exactly where incremental
-    // insertion's resize trigger (nDistinct + 1 >= sizeLimit) lands
-    var q = qBits
-    while ((((1L << q) * 0.95).toLong) <= n) q += 1
+    val q = qFor(n, qBits, Int.MaxValue)
     require(hashBits - q >= 1, s"entries exceed hash space (n=$n hashBits=$hashBits)")
-    if (q != qBits) {
-      // quotient width changed: keys must be re-rotated; recurse once
+    if (q != sortQ) {
+      // duplicates lowered q: keys must be re-rotated and re-sorted; the
+      // recursion's entries are distinct, so it sorts once at q
       val fx = new Array[Long](n)
       i = 0
-      while (i < n) { fx(i) = unrotate(keys(i), qBits, hashBits); i += 1 }
+      while (i < n) { fx(i) = unrotate(keys(i), sortQ, hashBits); i += 1 }
       return fromEntries(q, countBits, hashBits, mode, kTokens, zTokens, seed, fx, vals, n)
     }
 

@@ -9,8 +9,10 @@ import org.apache.spark.sql.functions._
   * Scale design (100 TB / 1000 executors): every single-sketch build goes
   * through one sorted shard core. Map tasks group fingerprints into
   * array chunks by fingerprint-range bucket (high bits), the exchange moves
-  * those 8-byte fingerprints, and each reduce task builds its shard in one
-  * radix-sorted `fromEntries` pass. Shards cover disjoint fingerprint
+  * those 8-byte fingerprints to one reduce task per core, each owning a
+  * contiguous run of buckets, and a task builds its shards one at a time,
+  * each in one radix-sorted `fromEntries` pass; a writer downstream makes
+  * one file per task, not one per bucket. Shards cover disjoint fingerprint
   * ranges, so merging or re-sharding them ([[reshardMerge]]) is another
   * sorted build with the tight canonical q, whatever the bucket count.
   * The per-insert UDAF remains for the builds that group rows by a key
@@ -42,8 +44,9 @@ object BqfPipeline {
     * how the build survives 100 TB: Spark's shuffle machinery moves 8-byte
     * fingerprints; the sketch is only materialized once per shard.
     *
-    * Returns (bucket, serialized sketch) rows; `nBuckets` must be a power
-    * of two.
+    * Returns (bucket, serialized sketch) rows in min(nBuckets,
+    * defaultParallelism) partitions, each an ascending contiguous run of
+    * buckets (see [[shardExchange]]); `nBuckets` must be a power of two.
     */
   def buildIndexSorted(df: DataFrame, fpCol: Column, params: graft.operators.BqfParams,
                        nBuckets: Int): DataFrame = {
@@ -66,8 +69,9 @@ object BqfPipeline {
       params, nBuckets)
   }
 
-  /** The sorted shard core: chunk by bucket map-side, exchange the chunks,
-    * gather each bucket's chunks and build its shard with `fromEntries`.
+  /** The sorted shard core: chunk by bucket map-side, exchange the chunks
+    * to one reduce task per core, gather each bucket's chunks and build its
+    * shard with `fromEntries`, one shard at a time.
     */
   private def sortedShards(fpArrays: Dataset[Array[Long]], params: BqfParams,
                            nBuckets: Int): DataFrame = {
@@ -84,10 +88,9 @@ object BqfPipeline {
     // array row per bucket (~tasks x buckets rows total instead of one row
     // per k-gram); array encode/decode is a memcpy. Same shuffle BYTES,
     // ~10^4x fewer shuffle ROWS.
-    fpArrays
+    shardExchange(fpArrays
       .mapPartitions(docs => chunkByBucket(docs, nBuckets, shift))
-      .toDF("bucket", "chunk")
-      .repartition(nBuckets, col("bucket"))
+      .toDF("bucket", "chunk"), nBuckets)
       .as[(Long, Array[Long])]
       .mapPartitions { it =>
         gatherChunks(it.map { case (b, c) => (b, c, null) }).map { case (bucket, fps, _) =>
@@ -95,6 +98,23 @@ object BqfPipeline {
         }
       }
       .toDF("bucket", "sketch")
+  }
+
+  /** The shard exchange: (bucket, ...) chunk rows move to
+    * min(nBuckets, defaultParallelism) reduce tasks, each owning an equal,
+    * contiguous, ascending run of buckets. `repartitionById` places rows
+    * exactly; hash placement leaves some tasks empty and stacks buckets on
+    * others. A task that owns several buckets sorts its chunk rows by
+    * bucket (~tasks x buckets array rows, in Spark-managed spillable
+    * memory), so [[gatherChunks]] still materializes one shard at a time.
+    * `Dataset.coalesce` would avoid the sort but, under shuffle reduce
+    * locality, deals partitions to tasks round-robin, not in runs.
+    */
+  private def shardExchange(chunks: DataFrame, nBuckets: Int): DataFrame = {
+    val tasks = math.min(nBuckets, chunks.sparkSession.sparkContext.defaultParallelism)
+    val byTask = chunks.repartitionById(tasks,
+      shiftright(col("bucket") * tasks, java.lang.Integer.numberOfTrailingZeros(nBuckets)).cast("int"))
+    if (tasks == nBuckets) byTask else byTask.sortWithinPartitions("bucket")
   }
 
   /** Map-side bucketizer shared by the index builds: groups each task's
@@ -155,47 +175,53 @@ object BqfPipeline {
       override def next(): (Long, Array[Long]) = { fill(); queue.dequeue() }
     }
 
-  /** Concatenate per-bucket chunk rows ((bucket, fps, stored?) with stored
-    * possibly null for the all-ones build) into one contiguous pair of
-    * arrays per bucket — plain arraycopies, no per-entry work.
-    */
   /** Reduce-task memory guard: a shard build gathers its whole shard
     * (~16 B per fingerprint + radix buffers), so an under-sharded huge
     * corpus would OOM the executor mid-stage with no hint. Fail FAST with
     * the actionable fix instead (measured on the 620 M-k-gram run: 128
     * shards x 32 tasks broke an 8 GiB heap; 256 x 16 built fine). The cap
-    * is a per-task fingerprint budget, overridable via the
+    * is a per-shard fingerprint budget — a task gathers one shard at a
+    * time, so it bounds exactly one shard — overridable via the
     * `graft.maxShardFps` system property.
     */
   private def maxShardFps: Long =
     java.lang.Long.getLong("graft.maxShardFps", 96L << 20) // ~1.5 GB gathered
 
+  /** Concatenate a task's chunk rows ((bucket, fps, stored?) with stored
+    * null for the all-ones build), which [[shardExchange]] delivers grouped
+    * by ascending bucket, into one contiguous pair of arrays per bucket —
+    * plain arraycopies, no per-entry work, one shard held at a time.
+    */
   private def gatherChunks(it: Iterator[(Long, Array[Long], Array[Long])])
       : Iterator[(Long, Array[Long], Array[Long])] = {
-    val chunks = scala.collection.mutable.LongMap
-      .empty[scala.collection.mutable.ArrayBuffer[(Array[Long], Array[Long])]]
-    var gathered = 0L
+    val rows = it.buffered
     val cap = maxShardFps
-    it.foreach { case (b, fps, stored) =>
-      gathered += fps.length
-      if (gathered > cap) throw new IllegalStateException(
-        s"shard gather exceeds $cap fingerprints in one task — the corpus is " +
-        "under-sharded for this executor memory; raise nBuckets (shard size = " +
-        "total fingerprints / nBuckets must fit task memory at ~16 B each) or " +
-        "-Dgraft.maxShardFps to raise the guard")
-      chunks.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty) += ((fps, stored))
-    }
-    chunks.iterator.map { case (bucket, parts) =>
-      val n = parts.iterator.map(_._1.length).sum
-      val fps = new Array[Long](n)
-      val stored = if (parts.head._2 == null) null else new Array[Long](n)
-      var off = 0
-      parts.foreach { case (f, s) =>
-        System.arraycopy(f, 0, fps, off, f.length)
-        if (stored != null) System.arraycopy(s, 0, stored, off, s.length)
-        off += f.length
+    new Iterator[(Long, Array[Long], Array[Long])] {
+      override def hasNext: Boolean = rows.hasNext
+      override def next(): (Long, Array[Long], Array[Long]) = {
+        val bucket = rows.head._1
+        val parts = scala.collection.mutable.ArrayBuffer.empty[(Array[Long], Array[Long])]
+        var n = 0L
+        while (rows.hasNext && rows.head._1 == bucket) {
+          val (_, fps, stored) = rows.next()
+          n += fps.length
+          if (n > cap) throw new IllegalStateException(
+            s"shard gather exceeds $cap fingerprints in one shard — the corpus is " +
+            "under-sharded for this executor memory; raise nBuckets (shard size = " +
+            "total fingerprints / nBuckets must fit task memory at ~16 B each) or " +
+            "-Dgraft.maxShardFps to raise the guard")
+          parts += ((fps, stored))
+        }
+        val fps = new Array[Long](n.toInt)
+        val stored = if (parts.head._2 == null) null else new Array[Long](n.toInt)
+        var off = 0
+        parts.foreach { case (f, s) =>
+          System.arraycopy(f, 0, fps, off, f.length)
+          if (stored != null) System.arraycopy(s, 0, stored, off, s.length)
+          off += f.length
+        }
+        (bucket, fps, stored)
       }
-      (bucket, fps, stored)
     }
   }
 
@@ -212,48 +238,57 @@ object BqfPipeline {
     * sketch per output bucket. This is the scale form of the final merge
     * level: where [[treeMerge]] ends in one serial reducer producing a
     * driver blob, reshardMerge's last level is `nOut` independent O(n)
-    * sorted builds, so merge wall time scales with cores. Output bucket b
-    * of nOut is exactly the merge of input shards covering that fingerprint
-    * range (high-bit prefix nesting), regardless of how the inputs were
-    * sharded.
+    * sorted builds, spread over one reduce task per core by the same
+    * [[shardExchange]] as the build, so merge wall time scales with cores.
+    * Output bucket b of nOut is exactly the merge of input shards covering
+    * that fingerprint range (high-bit prefix nesting), regardless of how the
+    * inputs were sharded.
     */
   def reshardMerge(shards: DataFrame, params: BqfParams, nOut: Int): DataFrame = {
     require(nOut >= 1 && (nOut & (nOut - 1)) == 0, "nOut must be a power of 2")
     val spark = shards.sparkSession
     import spark.implicits._
     val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nOut)
-    shards.select("sketch").as[Array[Byte]]
-      .mapPartitions { sketches =>
-        val fb = new Array[scala.collection.mutable.ArrayBuilder.ofLong](nOut)
-        val sb = new Array[scala.collection.mutable.ArrayBuilder.ofLong](nOut)
-        sketches.foreach { bytes =>
-          // specialized visitor: zero boxing across the 10^8-entry stream
-          graft.core.BackpackFilter.deserialize(bytes).foreachRaw { (fp, stored) =>
-            val b = (fp >>> shift).toInt
-            if (fb(b) == null) {
-              fb(b) = new scala.collection.mutable.ArrayBuilder.ofLong
-              sb(b) = new scala.collection.mutable.ArrayBuilder.ofLong
-            }
-            fb(b).addOne(fp)
-            sb(b).addOne(stored)
-          }
-        }
-        Iterator.range(0, nOut).flatMap { b =>
-          if (fb(b) == null) Iterator.empty
-          else {
-            val out = (b.toLong, fb(b).result(), sb(b).result())
-            fb(b) = null; sb(b) = null
-            Iterator.single(out)
-          }
-        }
-      }
-      .toDF("bucket", "fps", "stored")
-      .repartition(nOut, col("bucket"))
+    shardExchange(shards.select("sketch").as[Array[Byte]]
+      .mapPartitions(_.flatMap(bytes =>
+        splitByBucket(graft.core.BackpackFilter.deserialize(bytes), nOut, shift)))
+      .toDF("bucket", "fps", "stored"), nOut)
       .as[(Long, Array[Long], Array[Long])]
       .mapPartitions(it => gatherChunks(it).map { case (bucket, fps, stored) =>
         (bucket, buildShard(fps, stored, params))
       })
       .toDF("bucket", "sketch")
+  }
+
+  /** One input shard's raw entries as (bucket, fps, stored) chunk rows, one
+    * per output bucket it touches. The arrays are sized from the shard's
+    * `distinctCount`, and each shard's rows are emitted before the next
+    * shard is read, so a map task holds one input shard at a time.
+    */
+  private def splitByBucket(f: graft.core.BackpackFilter, nOut: Int,
+                            shift: Int): Iterator[(Long, Array[Long], Array[Long])] = {
+    val n = f.distinctCount.toInt
+    val fps = new Array[Long](n)
+    val stored = new Array[Long](n)
+    val sizes = new Array[Int](nOut)
+    var i = 0
+    // specialized visitor: zero boxing across the 10^8-entry stream
+    f.foreachRaw { (fp, s) =>
+      fps(i) = fp; stored(i) = s; sizes((fp >>> shift).toInt) += 1; i += 1
+    }
+    val used = (0 until nOut).filter(sizes(_) > 0)
+    if (used.length <= 1) return used.iterator.map(b => (b.toLong, fps, stored))
+    val outF = new Array[Array[Long]](nOut)
+    val outS = new Array[Array[Long]](nOut)
+    used.foreach { b => outF(b) = new Array[Long](sizes(b)); outS(b) = new Array[Long](sizes(b)) }
+    java.util.Arrays.fill(sizes, 0)
+    i = 0
+    while (i < n) {
+      val b = (fps(i) >>> shift).toInt
+      outF(b)(sizes(b)) = fps(i); outS(b)(sizes(b)) = stored(i); sizes(b) += 1
+      i += 1
+    }
+    used.iterator.map(b => (b.toLong, outF(b), outS(b)))
   }
 
   /** The enumerate operator exposed relationally at scale: explode every

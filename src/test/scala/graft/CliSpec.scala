@@ -268,6 +268,30 @@ class CliSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("conflict"), s"got: ${e2.getMessage}")
   }
 
+  test("build-index layout: one task per core over contiguous buckets, one row group per shard") {
+    val cores = spark.sparkContext.defaultParallelism
+    val df = spark.read.parquet(s"$dir/tokens.parquet")
+    val index = graft.plans.BqfPipeline.buildIndexSorted(df,
+      sgram_fingerprints(col("tokens"), 6, 48, 0L), graft.operators.BqfParams(), 64)
+    val perTask = index.select("bucket").as[Long].rdd.glom().collect().map(_.toSeq)
+    assert(perTask.length == math.min(64, cores), s"${perTask.length} tasks on $cores cores")
+    // every bucket is occupied here; each task owns one ascending run of them
+    assert(perTask.flatten.toSeq == (0L until 64L), perTask.mkString(" | "))
+    assert(perTask.map(_.length).max - perTask.map(_.length).min <= 1, perTask.mkString(" | "))
+    Cli.main(Array("build-index", "-i", s"$dir/tokens.parquet", "-o", s"$dir/layout.parquet",
+      "-n", "64", "-q", "12", "-c", "16", "-k", "8", "-z", "2"))
+    val parts = new java.io.File(s"$dir/layout.parquet").listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.nonEmpty && parts.length <= cores, s"${parts.length} part files on $cores cores")
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val rowGroups = parts.toSeq.flatMap { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.getPath), conf))
+      try reader.getFooter.getBlocks.asScala.map(_.getRowCount) finally reader.close()
+    }
+    assert(rowGroups.length == 64 && rowGroups.forall(_ == 1L), rowGroups.mkString(","))
+  }
+
   test("enumerate streams the sketch entries out relationally") {
     val out = spark.read.parquet {
       Cli.main(Array("enumerate", "-b", s"$dir/sketch.bqf", "-o", s"$dir/enum.parquet"))

@@ -57,6 +57,28 @@ class BulkBuildSpec extends AnyFunSuite {
     assertTablesIdentical(inc, blk, "auto-resize")
   }
 
+  test("bulk == incremental across the single-sort q: distinct, duplicate-heavy, small hashBits") {
+    // fromEntries sorts at the q that n0 (pre-dedup) entries need, capped at
+    // hashBits - 1, and re-sorts only when dedup lowers q
+    val rng = new Random(31)
+    def distinctFps(n: Int, h: Int): Vector[Long] =
+      Iterator.continually(rng.nextLong() & Bits.maskRight(h)).distinct.take(n).toVector
+    val cases = Seq(
+      // all distinct: n0 = n, one sort at the final q = 12
+      ("all-distinct", 34, distinctFps(3000, 34)),
+      // n0 = 1800 needs q = 11, n = 900 fits q = 10 (0.95 * 1024 = 972)
+      ("duplicate-heavy", 34, rng.shuffle(distinctFps(900, 34).flatMap(fp => Seq(fp, fp)))),
+      // n0 = 70000 would need q = 17 > hashBits = 16; n = 1000 needs q = 11
+      ("small-hashBits", 16, rng.shuffle(distinctFps(1000, 16).flatMap(fp => Vector.fill(70)(fp)))))
+    for ((label, h, fps) <- cases) {
+      val inc = incremental(fps.map(fp => (fp, 1L)), 7, 8, h)
+      assertTablesIdentical(inc, bulk(fps.map(fp => (fp, 1L)), 7, 8, h), s"$label counted")
+      val allOnes = BackpackFilter.fromEntries(7, 8, h, CountMode.Exact, inc.kTokens, inc.zTokens,
+        inc.seed, fps.toArray, null, fps.length)
+      assertTablesIdentical(inc, allOnes, s"$label all-ones")
+    }
+  }
+
   test("bulk == incremental on toric wrap clusters") {
     // clusters at the last quotients spilling over slot 0
     val q = 7; val h = 16
