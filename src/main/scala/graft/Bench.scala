@@ -239,13 +239,9 @@ object Bench {
     val queryParams = BqfParams(qBits = 16, countBits = 8, hashBits = 48, kTokens = 8, zTokens = 2)
     lazy val queryDf = TokensTable.dataframe(spark, 20000, partitions = cpus)
     lazy val qfps = sgram_fingerprints(col("tokens"), queryParams.sTokens, queryParams.hashBits, queryParams.seed)
-    // sorted-index + tree merge: disjoint shards, so the same blob as
-    // BqfPipeline.buildSharded — this build is untimed but real wall time
-    def buildBlob(df: org.apache.spark.sql.DataFrame,
-                  fps: org.apache.spark.sql.Column,
-                  p: BqfParams): Array[Byte] =
-      BqfPipeline.treeMerge(BqfPipeline.buildIndexSorted(df, fps, p, 32), 32, 16)
-    lazy val bq = new BqfQuery(spark, buildBlob(queryDf, qfps, queryParams))
+    // this build is untimed but real wall time
+    lazy val bq = new BqfQuery(spark,
+      BqfPipeline.buildSharded(queryDf, qfps, col("doc_id"), queryParams, nBuckets = 32))
 
     // 2. point-query throughput: 3M+ abundance probes through the broadcast
     // sketch. Min over trials, same policy as the build phase (trial 1 also
@@ -353,7 +349,8 @@ object Bench {
       // stress sketch: same corpus, fingerprints masked to 32 bits
       val stressParams = queryParams.copy(hashBits = 32)
       val sfps = sgram_fingerprints(col("tokens"), stressParams.sTokens, stressParams.hashBits, stressParams.seed)
-      val bq32 = new BqfQuery(spark, buildBlob(queryDf, sfps, stressParams))
+      val bq32 = new BqfQuery(spark,
+        BqfPipeline.buildSharded(queryDf, sfps, col("doc_id"), stressParams, nBuckets = 32))
       val (fp32, bound32, distinct32, sec32) = audit(32, bq32)
       phaseGc += "fp_audit" -> (gcMs() - g0)
       results += "fp_audit" -> (sec48 + sec32)
@@ -421,7 +418,6 @@ object Bench {
     // steady-state cost, store merge included) — compared against the
     // one-shot batch build of the same input.
     if (phases("ingest")) {
-      import spark.implicits._
       val ingestDocs = sys.env.getOrElse("SPARK_GRAFT_INGEST_ROWS", "20000").toLong
       val ingestBatches = sys.env.getOrElse("SPARK_GRAFT_INGEST_BATCHES", "5").toInt
       val ip = BqfParams(qBits = 16, countBits = 8, hashBits = 48, kTokens = 8, zTokens = 2)

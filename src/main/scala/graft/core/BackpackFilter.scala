@@ -512,18 +512,6 @@ final class BackpackFilter(
   @inline private def countMask: Long = maskRight(countBits)
   @inline private def countMax: Long = (1L << countBits) - 1L
 
-  /** Encode an abundance for storage (clamp / floor-log2). */
-  @inline private def encodeCount(count: Long): Long = mode match {
-    case CountMode.Exact =>
-      if (count >= countMax) countMax else if (count < 0) 0 else count
-    case CountMode.OrderOfMagnitude =>
-      if (count <= 0) 0
-      else {
-        val e = 63 - java.lang.Long.numberOfLeadingZeros(count)
-        if (e >= countMax) countMax else e.toLong
-      }
-  }
-
   /** Decode a stored count into the reported abundance. */
   @inline private def decodeCount(stored: Long): Long = mode match {
     case CountMode.Exact            => stored
@@ -593,7 +581,8 @@ final class BackpackFilter(
     * load cap). Duplicate fingerprints accumulate in the counter
     * (/root/reference/src/abstract_bqf.cpp:101-167).
     */
-  def add(fp: Long, count: Long = 1L): Unit = addEncoded(fp, encodeCount(count), mergePath = false)
+  def add(fp: Long, count: Long = 1L): Unit =
+    addEncoded(fp, BackpackFilter.encodeCount(count, mode, countMax), mergePath = false)
 
   /** Raw insert with an already-encoded stored count (merge/rebuild path). */
   private def addEncoded(fp0: Long, storedCount: Long, mergePath: Boolean): Unit = {
@@ -1012,6 +1001,18 @@ object BackpackFilter {
     math.max(7, q)
   }
 
+  /** Encode an abundance for storage (clamp / clamped floor-log2). */
+  @inline private def encodeCount(count: Long, mode: CountMode, countMax: Long): Long = mode match {
+    case CountMode.Exact =>
+      if (count >= countMax) countMax else if (count < 0) 0 else count
+    case CountMode.OrderOfMagnitude =>
+      if (count <= 0) 0
+      else {
+        val e = 63 - java.lang.Long.numberOfLeadingZeros(count)
+        if (e >= countMax) countMax else e.toLong
+      }
+  }
+
   /** Smallest q whose 95% load cap admits `n` distinct entries. */
   def tightQBits(n: Long): Int = qFor(n, 7, 62)
 
@@ -1125,13 +1126,14 @@ object BackpackFilter {
     * from sorted entries yields a table bit-identical to incremental
     * insertion; property tests assert exactly that.
     *
-    * `combine`: how to fold duplicate fingerprints' stored counts
-    * (saturating add for exact, max for oom).
+    * `counts` are stored (encoded) counts; duplicate fingerprints' counts
+    * fold by saturating add (exact) or max (oom).
     *
-    * `counts == null` means ALL-ONES stored counts (the plain index build):
-    * the sort then moves keys only (half the radix memory traffic) and the
-    * combine run-length-counts duplicates — results identical to passing an
-    * explicit ones array.
+    * `counts == null` means every entry is ONE occurrence (the plain index
+    * build): the sort then moves keys only (half the radix memory traffic),
+    * and each key's run of n duplicates is stored as the encoded count of n
+    * — min(n, 2^c - 1) exact, min(floor(log2 n), 2^c - 1) oom — the same
+    * table as passing the distinct keys with those stored counts.
     *
     * One sort per build: entries are rotated and sorted at the q that `n0`
     * distinct entries would need (capped at `hashBits - 1`). Dedup only
@@ -1151,22 +1153,22 @@ object BackpackFilter {
       if (allOnes) { sortKeys(keys, n0, hashBits); new Array[Long](n0) }
       else { val v = java.util.Arrays.copyOf(counts, n0); sortPairs(keys, v, n0, hashBits); v }
 
-    // 2. combine duplicate fingerprints
+    // 2. combine duplicate fingerprints: an all-ones run of equal keys is one
+    //    key seen (j - i) times, encoded once; stored counts fold pairwise
     val cMax = (1L << countBits) - 1
+    val exact = mode == CountMode.Exact
     var w = 0
     i = 0
     while (i < n0) {
-      var c = if (allOnes) 1L else vals(i)
       var j = i + 1
-      while (j < n0 && keys(j) == keys(i)) {
-        val cj = if (allOnes) 1L else vals(j)
-        c = mode match {
-          case CountMode.Exact            => math.min(c + cj, cMax)
-          case CountMode.OrderOfMagnitude => math.max(c, cj)
-        }
-        j += 1
+      while (j < n0 && keys(j) == keys(i)) j += 1
+      vals(w) = if (allOnes) encodeCount(j - i, mode, cMax) else {
+        var c = vals(i)
+        var k = i + 1
+        while (k < j) { c = if (exact) math.min(c + vals(k), cMax) else math.max(c, vals(k)); k += 1 }
+        math.min(c, cMax)
       }
-      keys(w) = keys(i); vals(w) = math.min(c, cMax); w += 1
+      keys(w) = keys(i); w += 1
       i = j
     }
     val n = w

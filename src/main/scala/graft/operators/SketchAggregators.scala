@@ -10,8 +10,10 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
 /** Construction parameters for a distributed BQF build.
   *
-  * @param qBits     initial quotient bits of each per-partition shard (they
-  *                  auto-resize at 95% load, so this only sets the floor)
+  * @param qBits     start quotient bits of the per-insert UDAF buffers
+  *                  (capped at 12; they auto-resize at 95% load). The sorted
+  *                  shard core and `reshardMerge` ignore it: their tables
+  *                  sit at the tight q for their distinct count.
   * @param countBits abundance counter bits (saturates at 2^c - 1)
   * @param hashBits  fingerprint width; FP bound = 2^-(hashBits - qBits)
   */
@@ -33,25 +35,21 @@ final case class BqfParams(
     */
   def fresh(): BackpackFilter =
     BackpackFilter(math.min(qBits, 12), countBits, hashBits, mode, kTokens, zTokens, seed)
-
-  /** Full-size filter at the declared qBits (query-side / direct use). */
-  def freshSized(): BackpackFilter =
-    BackpackFilter(qBits, countBits, hashBits, mode, kTokens, zTokens, seed)
 }
 
 /** Aggregation buffer: a live filter absorbing this task's rows plus a list
   * of already-built shards merged in from other partials. Keeping shards
   * lazy lets `finish` fold them in ONE k-way bulk merge (gather + radix sort
   * + sequential build) instead of k pairwise re-sorts — the final reducer of
-  * a wide aggregation touches each entry once. `cap` bounds buffered shards
-  * so executor memory stays flat on very wide merges.
+  * a wide aggregation touches each entry once. At most `MaxPending` (16)
+  * shards stay buffered, so executor memory stays flat on very wide merges.
   */
 final class BqfShards(var live: BackpackFilter,
                       var pending: List[BackpackFilter]) extends Serializable
     with com.esotericsoftware.kryo.KryoSerializable {
-  def absorb(other: BqfShards, cap: Int = 16): BqfShards = {
+  def absorb(other: BqfShards): BqfShards = {
     pending = other.live :: other.pending ::: pending
-    if (pending.size >= cap) consolidate()
+    if (pending.size >= BqfShards.MaxPending) consolidate()
     this
   }
   def consolidate(): BqfShards = {
@@ -71,20 +69,19 @@ final class BqfShards(var live: BackpackFilter,
   // ONE filter, which the receiving merge had to fold anyway.
   override def write(kryo: com.esotericsoftware.kryo.Kryo,
                      output: com.esotericsoftware.kryo.io.Output): Unit = {
-    consolidate()
-    if (live == null) output.writeInt(-1)
-    else {
-      val b = live.serialize()
-      output.writeInt(b.length)
-      output.writeBytes(b)
-    }
+    val b = consolidate().live.serialize()
+    output.writeInt(b.length)
+    output.writeBytes(b)
   }
   override def read(kryo: com.esotericsoftware.kryo.Kryo,
                     input: com.esotericsoftware.kryo.io.Input): Unit = {
-    val n = input.readInt()
-    live = if (n < 0) null else BackpackFilter.deserialize(input.readBytes(n))
+    live = BackpackFilter.deserialize(input.readBytes(input.readInt()))
     pending = Nil
   }
+}
+
+object BqfShards {
+  private val MaxPending = 16
 }
 
 /** The central mergeable UDAF of the library: each executor folds the
@@ -119,35 +116,6 @@ class BqfCountedAggregator(params: BqfParams)
   }
   override def merge(a: BqfShards, b: BqfShards): BqfShards = a.absorb(b)
   override def finish(r: BqfShards): Array[Byte] = r.result()
-  override def bufferEncoder: Encoder[BqfShards] = Encoders.kryo[BqfShards]
-  override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-}
-
-/** Merges already-serialized shard sketches (tree-merge / checkpoint resume
-  * stages). Null live filter until the first shard arrives.
-  */
-/** `cap` bounds how many deserialized shards are buffered before a
-  * consolidating bulk merge. A merge of exactly `width` blobs should pass
-  * cap >= width so the entries are gathered and sorted ONCE instead of in
-  * two partial passes — the blobs all arrive at the reducer regardless, so
-  * the cap changes fold count, not the memory order.
-  */
-class BqfMergeAggregator(cap: Int = 16)
-    extends Aggregator[Array[Byte], BqfShards, Array[Byte]] {
-  override def zero: BqfShards = new BqfShards(null, Nil)
-  override def reduce(b: BqfShards, bytes: Array[Byte]): BqfShards = {
-    val shard = BackpackFilter.deserialize(bytes)
-    if (b.live == null) b.live = shard else b.pending = shard :: b.pending
-    if (b.pending.size >= cap) b.consolidate()
-    b
-  }
-  override def merge(a: BqfShards, b: BqfShards): BqfShards = {
-    if (a.live == null) b
-    else if (b.live == null) a
-    else a.absorb(b, cap)
-  }
-  override def finish(r: BqfShards): Array[Byte] =
-    if (r.live == null) null else r.result()
   override def bufferEncoder: Encoder[BqfShards] = Encoders.kryo[BqfShards]
   override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
 }
@@ -229,9 +197,6 @@ object SketchAggregators {
 
   def bqfOverCountedFingerprints(params: BqfParams): UserDefinedFunction =
     udaf(new BqfCountedAggregator(params), longPairEnc)
-
-  def bqfMerge(cap: Int = 16): UserDefinedFunction =
-    udaf(new BqfMergeAggregator(cap), Encoders.BINARY)
 
   def hllOverFingerprintArrays(p: Int = 14, rehash: Boolean = true): UserDefinedFunction =
     udaf(new HllArrayAggregator(p, rehash), longArrayEnc)

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.core.BackpackFilter
 import graft.operators.{BqfParams, SketchAggregators}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,13 +13,13 @@ import org.apache.spark.sql.functions._
   * those 8-byte fingerprints to one reduce task per core, each owning a
   * contiguous run of buckets, and a task builds its shards one at a time,
   * each in one radix-sorted `fromEntries` pass; a writer downstream makes
-  * one file per task, not one per bucket. Shards cover disjoint fingerprint
-  * ranges, so merging or re-sharding them ([[reshardMerge]]) is another
-  * sorted build with the tight canonical q, whatever the bucket count.
-  * The per-insert UDAF remains for the builds that group rows by a key
-  * other than the fingerprint: the salted per-source build, and the
-  * checkpointed build, whose deterministic row-id buckets make checkpoints
-  * resumable and replays idempotent.
+  * one file per task, not one per bucket. [[reshardMerge]] is the one fold
+  * of shard sketches: another sorted build, at the tight canonical q
+  * whether its input shards are disjoint or overlap. The per-insert UDAF
+  * remains for the builds that group rows by a key other than the
+  * fingerprint: the salted per-source build, and the checkpointed build,
+  * whose deterministic row-id buckets make checkpoints resumable and
+  * replays idempotent.
   */
 object BqfPipeline {
 
@@ -31,7 +32,11 @@ object BqfPipeline {
     */
   def buildSharded(df: DataFrame, fpCol: Column, idCol: Column, params: BqfParams,
                    nBuckets: Int): Array[Byte] =
-    reshardMerge(buildIndexSorted(df, fpCol, params, nBuckets), params, 1)
+    foldToOne(buildIndexSorted(df, fpCol, params, nBuckets), params)
+
+  /** [[reshardMerge]] to one collected blob; no shards give a valid empty sketch. */
+  private[plans] def foldToOne(shards: DataFrame, params: BqfParams): Array[Byte] =
+    reshardMerge(shards, params, 1)
       .collect().headOption.map(_.getAs[Array[Byte]]("sketch"))
       .getOrElse(buildShard(Array.emptyLongArray, null, params))
 
@@ -226,23 +231,22 @@ object BqfPipeline {
   }
 
   private def buildShard(fps: Array[Long], stored: Array[Long], params: BqfParams): Array[Byte] =
-    graft.core.BackpackFilter.fromEntries(
+    BackpackFilter.fromEntries(
       7, params.countBits, params.hashBits, params.mode,
       params.kTokens, params.zTokens, params.seed, fps, stored, fps.length).serialize()
 
-  /** Distributed merge / re-shard: enumerate every shard sketch in parallel
-    * (lazy raw iteration — no shard is materialized as an entry array on a
-    * single node), shuffle the raw (fingerprint, storedCount) pairs to
-    * `nOut` fingerprint-range buckets as paired ARRAY CHUNKS (same
-    * rows-are-the-cost lesson as [[buildIndexSorted]]), and bulk-rebuild one
-    * sketch per output bucket. This is the scale form of the final merge
-    * level: where [[treeMerge]] ends in one serial reducer producing a
-    * driver blob, reshardMerge's last level is `nOut` independent O(n)
-    * sorted builds, spread over one reduce task per core by the same
-    * [[shardExchange]] as the build, so merge wall time scales with cores.
-    * Output bucket b of nOut is exactly the merge of input shards covering
-    * that fingerprint range (high-bit prefix nesting), regardless of how the
-    * inputs were sharded.
+  /** Distributed merge / re-shard, the one fold of shard sketches: enumerate
+    * every shard sketch in parallel (lazy raw iteration — no shard is
+    * materialized as an entry array on a single node), shuffle the raw
+    * (fingerprint, storedCount) pairs to `nOut` fingerprint-range buckets as
+    * paired ARRAY CHUNKS (same rows-are-the-cost lesson as
+    * [[buildIndexSorted]]), and bulk-rebuild one sketch per output bucket:
+    * `nOut` independent O(n) sorted builds, spread over one reduce task per
+    * core by the same [[shardExchange]] as the build, so merge wall time
+    * scales with cores. Output bucket b of nOut is exactly the merge of the
+    * input shards' entries in that fingerprint range (high-bit prefix
+    * nesting), at the tight q for its distinct count, regardless of how the
+    * inputs were sharded or whether they overlap.
     */
   def reshardMerge(shards: DataFrame, params: BqfParams, nOut: Int): DataFrame = {
     require(nOut >= 1 && (nOut & (nOut - 1)) == 0, "nOut must be a power of 2")
@@ -251,7 +255,7 @@ object BqfPipeline {
     val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nOut)
     shardExchange(shards.select("sketch").as[Array[Byte]]
       .mapPartitions(_.flatMap(bytes =>
-        splitByBucket(graft.core.BackpackFilter.deserialize(bytes), nOut, shift)))
+        splitByBucket(BackpackFilter.deserialize(bytes), nOut, shift)))
       .toDF("bucket", "fps", "stored"), nOut)
       .as[(Long, Array[Long], Array[Long])]
       .mapPartitions(it => gatherChunks(it).map { case (bucket, fps, stored) =>
@@ -265,7 +269,7 @@ object BqfPipeline {
     * `distinctCount`, and each shard's rows are emitted before the next
     * shard is read, so a map task holds one input shard at a time.
     */
-  private def splitByBucket(f: graft.core.BackpackFilter, nOut: Int,
+  private def splitByBucket(f: BackpackFilter, nOut: Int,
                             shift: Int): Iterator[(Long, Array[Long], Array[Long])] = {
     val n = f.distinctCount.toInt
     val fps = new Array[Long](n)
@@ -342,36 +346,32 @@ object BqfPipeline {
     }.toDF("fp", "abundance")
   }
 
-  /** Fold (bucket, sketch) rows into one sketch through a merge tree with
-    * bounded fanout, so the final reducer never sees more than `fanout`
-    * blobs per level.
+  /** [[reshardMerge]] of (bucket, sketch) rows to one blob, with the params
+    * read from the first blob's header; `null` for no rows. `width0` and
+    * `fanout` are unused; the signature stays for existing callers.
     */
-  def treeMerge(shards0: DataFrame, width0: Int, fanout: Int): Array[Byte] = {
-    val merge = SketchAggregators.bqfMerge(cap = math.max(16, fanout))
-    var shards = shards0
-    var width = width0
-    while (width > fanout) {
-      width = (width + fanout - 1) / fanout
-      shards = shards
-        .groupBy(pmod(col("bucket"), lit(width)).as("bucket"))
-        .agg(merge(col("sketch")).as("sketch"))
-    }
-    shards.agg(merge(col("sketch")).as("sketch")).head().getAs[Array[Byte]](0)
-  }
+  def treeMerge(shards: DataFrame, width0: Int, fanout: Int): Array[Byte] =
+    shards.select("sketch").head(1).headOption.map { r =>
+      val f = BackpackFilter.deserialize(r.getAs[Array[Byte]](0))
+      foldToOne(shards, BqfParams(f.quotientBits, f.countBits, f.hashBits, f.mode,
+        f.kTokens, f.zTokens, f.seed))
+    }.orNull
 
   /** Two-level skew-safe per-source build: hot `source` values fan out over
     * `salts` deterministic salt buckets before the per-source merge, so no
-    * single task absorbs a hot key's entire row stream.
+    * single task absorbs a hot key's entire row stream; each source's at
+    * most `salts` partials then fold in one `BackpackFilter.mergeAll`.
     */
   def buildPerSource(df: DataFrame, fpCol: Column, idCol: Column, sourceCol: Column,
                      params: BqfParams, salts: Int = 8): DataFrame = {
     val bqf = SketchAggregators.bqfOverFingerprintArrays(params)
-    val merge = SketchAggregators.bqfMerge()
+    val merge = udf((partials: Seq[Array[Byte]]) =>
+      BackpackFilter.mergeAll(partials.map(BackpackFilter.deserialize)).serialize())
     df.withColumn("__salt", pmod(xxhash64(idCol), lit(salts)))
       .groupBy(sourceCol.as("source"), col("__salt"))
       .agg(bqf(fpCol).as("partial"))
       .groupBy(col("source"))
-      .agg(merge(col("partial")).as("sketch"))
+      .agg(merge(collect_list(col("partial"))).as("sketch"))
   }
 }
 
@@ -430,9 +430,18 @@ object CheckpointedBuild {
     }
   }
 
-  /** Merge all committed shards into the final sketch. */
-  def result(spark: SparkSession, dir: String, nBuckets: Int, fanout: Int = 16): Array[Byte] = {
-    val shards = spark.read.parquet(dir).select("bucket", "sketch")
-    BqfPipeline.treeMerge(shards, nBuckets, fanout)
+  /** Fold the committed shards into the final sketch through
+    * [[BqfPipeline.reshardMerge]]: the canonical table at the tight q (with
+    * exact counters, the bytes of [[BqfPipeline.buildSharded]]). A bucket
+    * committed more than once (a retried or concurrent [[run]]) counts once,
+    * from its latest commit; shards committed under other params fail.
+    */
+  def result(spark: SparkSession, dir: String, params: BqfParams): Array[Byte] = {
+    val rows = spark.read.parquet(dir)
+    val tags = rows.select("params_tag").distinct().collect().map(_.getString(0))
+    require(tags.forall(_ == paramsTag(params)),
+      s"checkpoint $dir holds shards built with ${tags.mkString(", ")}, not ${paramsTag(params)}")
+    BqfPipeline.foldToOne(rows.groupBy("bucket")
+      .agg(max_by(col("sketch"), col("committed_at_ms")).as("sketch")), params)
   }
 }

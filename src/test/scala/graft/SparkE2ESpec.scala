@@ -32,6 +32,22 @@ class SparkE2ESpec extends AnyFunSuite {
     val oracle = exactCounts(500)
     assert(sketch.distinctCount == oracle.size)
     assert(sketch.enumerate() == oracle, "sketch contents != exact oracle")
+
+    // order-of-magnitude counters over duplicated docs (every doc once,
+    // every third doc three more times): a fingerprint seen n times
+    // answers 1 << floor(log2 n)
+    val oomParams = params.copy(mode = graft.core.CountMode.OrderOfMagnitude)
+    val extra = df.filter(abs(xxhash64(col("doc_id"))) % 3 === 0)
+    val dup = (1 to 3).foldLeft(df)((acc, i) =>
+      acc.unionByName(extra.withColumn("doc_id", concat(lit(s"copy$i-"), col("doc_id")))))
+    val dupFps = sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed)
+    val oomOracle = dup.select(explode(dupFps).as("fp")).groupBy("fp").count()
+      .as[(Long, Long)].collect()
+      .map { case (fp, n) => fp -> (1L << (63 - java.lang.Long.numberOfLeadingZeros(n))) }.toMap
+    assert(oomOracle.values.exists(_ >= 4L), "input has no fingerprint seen 4+ times")
+    val oom = BackpackFilter.deserialize(
+      BqfPipeline.buildSharded(dup, dupFps, col("doc_id"), oomParams, nBuckets = 16))
+    assert(oom.enumerate() == oomOracle, "oom sketch contents != 1 << floor(log2 n) oracle")
   }
 
   test("build is independent of partitioning (2 vs 8 partitions)") {
@@ -48,9 +64,7 @@ class SparkE2ESpec extends AnyFunSuite {
     // every doc four times under distinct doc_ids: the copies land in
     // different row-id buckets, which is what made per-bucket partial
     // sketches overcount distincts and grow q with the bucket count
-    val base = TokensTable.dataframe(spark, 400, partitions = 4)
-    val df = (1 to 3).foldLeft(base)((acc, i) =>
-      acc.unionByName(base.withColumn("doc_id", concat(lit(s"copy$i-"), col("doc_id")))))
+    val df = quadrupled(400)
     val fps = sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed)
     val at8 = BqfPipeline.buildSharded(df, fps, col("doc_id"), params, nBuckets = 8)
     val at64 = BqfPipeline.buildSharded(df, fps, col("doc_id"), params, nBuckets = 64)
@@ -93,10 +107,55 @@ class SparkE2ESpec extends AnyFunSuite {
     val shardCols = spark.read.parquet(dir).columns.toSet
     assert(CheckpointedBuild.LineageColumns.toSet.subsetOf(shardCols))
     // final result identical to an uninterrupted single-sketch build
-    val resumed = BackpackFilter.deserialize(CheckpointedBuild.result(spark, dir, nBuckets))
+    val resumed = BackpackFilter.deserialize(CheckpointedBuild.result(spark, dir, params))
     val direct = BackpackFilter.deserialize(
       BqfPipeline.buildSharded(df, fps, col("doc_id"), params, nBuckets = 16))
     assert(resumed.enumerate() == direct.enumerate())
+  }
+
+  /** Every doc four times under distinct doc_ids: the copies land in
+    * different row-id buckets, so per-bucket sketches overlap.
+    */
+  private def quadrupled(nRows: Int) = {
+    val base = TokensTable.dataframe(spark, nRows, partitions = 4)
+    (1 to 3).foldLeft(base)((acc, i) =>
+      acc.unionByName(base.withColumn("doc_id", concat(lit(s"copy$i-"), col("doc_id")))))
+  }
+
+  test("checkpointed build over overlapping buckets: same bytes as buildSharded, tight q") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString + "/shards"
+    val df = quadrupled(300)
+    val fps = sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed)
+    CheckpointedBuild.run(df, fps, col("doc_id"), params, 16, dir)
+    val viaCheckpoint = CheckpointedBuild.result(spark, dir, params)
+    val direct = BqfPipeline.buildSharded(df, fps, col("doc_id"), params, nBuckets = 16)
+    val sketch = BackpackFilter.deserialize(viaCheckpoint)
+    assert(sketch.distinctCount == exactCounts(300).size)
+    assert(sketch.quotientBits == BackpackFilter.tightQBits(sketch.distinctCount))
+    assert(java.util.Arrays.equals(viaCheckpoint, direct), "checkpoint result bytes != buildSharded")
+  }
+
+  test("checkpointed build: a bucket committed twice counts once; foreign params fail") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString + "/shards"
+    val df = TokensTable.dataframe(spark, 300, partitions = 4)
+    val fps = sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed)
+    CheckpointedBuild.run(df, fps, col("doc_id"), params, 8, dir)
+    // a second run that read committedBuckets before the first committed
+    // appends the same bucket again, later
+    val bucket = spark.read.parquet(dir).select("bucket").as[Long].head()
+    val again = spark.createDataFrame(
+      spark.read.parquet(dir).filter(col("bucket") === bucket).collectAsList(),
+      spark.read.parquet(dir).schema)
+    again.withColumn("committed_at_ms", col("committed_at_ms") + 1000L)
+      .write.mode("append").parquet(dir)
+    assert(spark.read.parquet(dir).filter(col("bucket") === bucket).count() == 2)
+    val direct = BqfPipeline.buildSharded(df, fps, col("doc_id"), params, nBuckets = 8)
+    assert(java.util.Arrays.equals(CheckpointedBuild.result(spark, dir, params), direct),
+      "a re-appended bucket changed the checkpoint result")
+    val ex = intercept[IllegalArgumentException] {
+      CheckpointedBuild.result(spark, dir, params.copy(countBits = 8))
+    }
+    assert(ex.getMessage.contains("c16"), ex.getMessage)
   }
 
   test("broadcast query expressions: abundance, membership, sequence stats") {

@@ -102,6 +102,24 @@ class BulkBuildSpec extends AnyFunSuite {
     assertTablesIdentical(inc, blk, "oom")
   }
 
+  test("all-ones oom build stores floor(log2 n) per key: same table as the counted path") {
+    // a key seen n times is one key with abundance n; the all-ones combine
+    // encodes n once, so it must equal the counted build fed with each
+    // distinct key's encoded occurrence count (c = 3: n >= 256 saturates)
+    val h = 30
+    val rng = new Random(41)
+    val keys = Iterator.continually(rng.nextLong() & Bits.maskRight(h)).distinct.take(600).toVector
+    val mult = keys.map(fp => fp -> (if (rng.nextInt(4) == 0) 1 + rng.nextInt(400) else 1 + rng.nextInt(4))).toMap
+    val occurrences = rng.shuffle(keys.flatMap(fp => Vector.fill(mult(fp))(fp))).toArray
+    val allOnes = BackpackFilter.fromEntries(7, 3, h, CountMode.OrderOfMagnitude, 0, 0, 0L,
+      occurrences, null, occurrences.length)
+    val counted = bulk(keys.map(fp => (fp, mult(fp).toLong)), 7, 3, h, CountMode.OrderOfMagnitude)
+    assertTablesIdentical(counted, allOnes, "oom all-ones")
+    val once = keys.find(mult(_) == 1).get
+    val four = keys.find(mult(_) == 4).get
+    assert(allOnes.abundance(once) == 1L && allOnes.abundance(four) == 4L)
+  }
+
   test("mergeAll == sequential mergeInPlace results (enumerate equality)") {
     val h = 34
     val rng = new Random(77)

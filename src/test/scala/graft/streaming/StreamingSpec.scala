@@ -272,7 +272,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val params = graft.operators.BqfParams(qBits = 10, countBits = 8, hashBits = 32,
       kTokens = 8, zTokens = 0, seed = 0L)
-    val f = params.freshSized()
+    val f = graft.core.BackpackFilter(params.qBits, params.countBits, params.hashBits, params.mode,
+      params.kTokens, params.zTokens, params.seed)
     val inserted = (1L to 500L).map(i => graft.core.Fingerprint.splitmix64(i) & 0xffffffffL)
     inserted.foreach(fp => f.add(fp))
     val bq = new graft.operators.BqfQuery(spark, f.serialize())
